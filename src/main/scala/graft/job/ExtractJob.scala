@@ -1,10 +1,12 @@
 package graft.job
 
-import graft.extract.Extractor
+import graft.html.HtmlExtract
 import graft.model._
 import graft.reflow.ExtractConfig
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.CollectionAccumulator
 
 /** The corpus-dimension driver (SURVEY.md §2.11 C1, §4): Iceberg/parquet
@@ -68,19 +70,17 @@ final case class JobConfig(
       * invisible; with task-level commits use "chunk").
       */
     resumeGranularity: String = "chunk",
-    /** "spans" (default): the layout-token PDF kernel over (doc_id,
-      * spans). "html": the web kernel (graft.html.HtmlExtract) over
-      * (doc_id, html) — same chunking, bucketed pruning, skew salting
-      * (keyed on html length instead of span count), doc/chunk resume
-      * and per-partition lineage metrics; only the per-row kernel and
-      * the input columns differ. "html_bytes": the same web kernel over
-      * crawl-native (doc_id, html_bytes[, content_type]) rows — the
-      * charset ladder (HtmlCharset) runs inside the same map pass; a
-      * missing content_type column reads as null (ladder continues at
-      * the meta prescan / content sniff).
+    /** "spans" (default, the PDF layout kernel), "html" or "html_bytes"
+      * (the web kernel over page text or crawl-native bytes): one entry
+      * each in the kernel table `ExtractJob.kernels`.
       */
     inputKind: String = "spans",
-    extract: ExtractConfig = ExtractConfig())
+    extract: ExtractConfig = ExtractConfig()) {
+  require(ExtractJob.kernels.isDefinedAt(inputKind),
+    s"unknown inputKind '$inputKind' (spans, html or html_bytes)")
+  require(resumeGranularity == "chunk" || resumeGranularity == "doc",
+    s"unknown resumeGranularity '$resumeGranularity' (chunk or doc)")
+}
 
 object ExtractJob {
 
@@ -132,160 +132,129 @@ object ExtractJob {
     docs.repartition(numPartitions * SaltFactor, key)
   }
 
-  /** Per-partition counters + the emit-exactly-once metric iterator,
-    * SHARED by the span and html chunk extractors: one metrics contract,
-    * one implementation — a divergence here would silently split the two
-    * kernels' lineage semantics. Constructed inside mapPartitions (task
-    * thread), never serialized.
+  /** What one input kind contributes to the shared chunk loop: its input
+    * projection (doc_id first, the kernel's input second), its skew
+    * measure and threshold, whether column 1 is a spans array (counted
+    * into n_spans_in), and its per-row function, built on the driver
+    * from the projected schema.
     */
-  private final class PartitionInstrumentation(runId: String, chunkId: Int) {
-    private val t0 = System.currentTimeMillis()
-    private val lm0 = graft.lm.Scorer.threadLmCallCount // task = one thread
-    private val pid = org.apache.spark.TaskContext.getPartitionId()
-    var nDocs = 0L
-    var nFailed = 0L
-    var spansIn = 0L
-    var spansOut = 0L
-    private var firstError: String = ""
-    def failed(docId: String, e: Throwable): Unit = {
-      nFailed += 1
-      if (firstError.isEmpty) firstError = s"$docId: ${e.getMessage}"
-    }
-    def wrap(out: Iterator[ExtractedDoc],
-        acc: CollectionAccumulator[PartitionMetric]): Iterator[ExtractedDoc] =
-      new Iterator[ExtractedDoc] {
-        private var metricEmitted = false
-        def hasNext: Boolean = {
-          val h = out.hasNext
-          if (!h && !metricEmitted) {
-            metricEmitted = true
-            acc.add(PartitionMetric(
-              runId, chunkId, pid, nDocs, nFailed, spansIn, spansOut,
-              graft.lm.Scorer.threadLmCallCount - lm0,
-              System.currentTimeMillis() - t0,
-              if (nFailed == 0) "done" else "done_with_failures",
-              firstError, System.currentTimeMillis()))
-          }
-          h
-        }
-        def next(): ExtractedDoc = out.next()
-      }
+  private[job] final case class Kernel(
+      columns: DataFrame => DataFrame,
+      size: Column,
+      bigDoc: JobConfig => Int,
+      countsSpans: Boolean,
+      row: (StructType, ExtractConfig) => (String, InternalRow) => ExtractedDoc)
+
+  /** The kernel table: the one place `inputKind` is matched. Skew is
+    * span count vs bigDocSpanThreshold for layout docs, length vs
+    * bigDocHtmlChars for pages (the units differ by ~an order of
+    * magnitude — see the JobConfig scaladoc).
+    */
+  private[job] val kernels: PartialFunction[String, Kernel] = {
+    case "spans" => Kernel(_.select("doc_id", "spans"), size(col("spans")),
+      _.bigDocSpanThreshold, countsSpans = true, (schema, ecfg) => {
+        val ord = FastScan.SpanOrdinals.from(schema)
+        (docId, row) => FastScan.extractRow(docId, row.getArray(1), ecfg, ord)
+      })
+    case "html" => Kernel(_.select("doc_id", "html"), length(col("html")),
+      _.bigDocHtmlChars, countsSpans = false, (_, _) => (docId, row) => {
+        require(!row.isNullAt(1), "null html")
+        HtmlExtract.extractRow(docId, row.getUTF8String(1).toString)
+      })
+    // length(binary) = octet count; bytes-per-char ~1 for the dominant
+    // encodings, so the same char threshold applies
+    case "html_bytes" => Kernel(htmlBytesColumns, length(col("html_bytes")),
+      _.bigDocHtmlChars, countsSpans = false, (_, _) => (docId, row) => {
+        require(!row.isNullAt(1), "null html_bytes")
+        val ct = if (row.isNullAt(2)) null else row.getUTF8String(2).toString
+        HtmlExtract.extractRowBytes(docId, row.getBinary(1), ct)
+      })
   }
 
-  /** Extract one chunk: returns the output Dataset; metrics are gathered
-    * through an accumulator (one row per partition — per-partition
-    * lineage). Rows are consumed on the Tungsten-direct path (FastScan) —
-    * no encoder deserialization of the span array.
+  /** html_bytes input: a WARC landing (Warc.ingestToTable) carries 3xx
+    * redirect rows — crawl EDGES with empty bodies; only HTTP-200
+    * captures are documents (mirrors Warc.extractAll's filter). A crawl
+    * table without content_type still works: it reads as null and the
+    * charset ladder continues past the absent transport layer.
     */
-  def extractChunk(
-      docs: Dataset[DocRow],
+  private def htmlBytesColumns(df: DataFrame): DataFrame = {
+    val content =
+      if (df.columns.contains("http_status")) df.filter(col("http_status") === 200)
+      else df
+    content.select(col("doc_id"), col("html_bytes"),
+      if (content.columns.contains("content_type")) col("content_type")
+      else lit(null).cast("string").as("content_type"))
+  }
+
+  /** The chunk loop every kernel runs: one Tungsten-direct mapPartitions
+    * pass over `df` (already projected by `kernel.columns`) — no encoder
+    * deserialization of the input. Metrics are gathered through an
+    * accumulator, one PartitionMetric per partition (per-partition
+    * lineage).
+    */
+  private def extractRows(
+      df: DataFrame,
+      kernel: Kernel,
       cfg: JobConfig,
       chunkId: Int,
       metricsAcc: CollectionAccumulator[PartitionMetric]): Dataset[ExtractedDoc] = {
-    val spark = docs.sparkSession
+    val spark = df.sparkSession
     import spark.implicits._
-    val ecfg = cfg.extract
     val runId = cfg.runId
-    val prunedDf = docs.toDF().select("doc_id", "spans")
-    val ord = FastScan.SpanOrdinals.from(prunedDf.schema)
-    val rdd = prunedDf
-      .queryExecution.toRdd.mapPartitions { it =>
-      val m = new PartitionInstrumentation(runId, chunkId)
+    val countsSpans = kernel.countsSpans
+    val extractRow = kernel.row(df.schema, cfg.extract)
+    val rdd = df.queryExecution.toRdd.mapPartitions { it =>
+      val t0 = System.currentTimeMillis()
+      val lm0 = graft.lm.Scorer.threadLmCallCount // task = one thread
+      var nDocs, nFailed, spansIn, spansOut = 0L
+      var firstError = ""
       val out = it.flatMap { row =>
-        m.nDocs += 1
-        // docId resolved defensively FIRST: a null doc_id / null spans is
+        nDocs += 1
+        // docId resolved defensively FIRST: a null doc_id / null input is
         // a malformed DOCUMENT (metrics row), never a task failure — at
         // 10^12 rows every garbage shape occurs, and an NPE outside the
         // try would abort the whole chunk on one dirty row
         var docId = "(null doc_id)"
         try {
           if (!row.isNullAt(0)) docId = row.getUTF8String(0).toString
-          val arr = row.getArray(1) // null spans -> NPE -> failed doc
-          m.spansIn += arr.numElements()
-          val tree = FastScan.decodeSpans(arr, ecfg.fast, ord)
-          val docOut = Extractor.extractTree(tree, ecfg)
-          val r = ExtractedDoc(docId, Extractor.emitSpans(docOut), docOut.text())
-          m.spansOut += r.spans.length
+          // counted before the kernel runs: a failing doc's spans are input
+          if (countsSpans) spansIn += row.getArray(1).numElements() // null spans -> NPE
+          val r = extractRow(docId, row)
+          spansOut += r.spans.length
           Some(r)
         } catch {
-          case scala.util.control.NonFatal(e) => m.failed(docId, e); None
+          case scala.util.control.NonFatal(e) =>
+            nFailed += 1
+            if (firstError.isEmpty) firstError = s"$docId: ${e.getMessage}"
+            None
         }
       }
-      m.wrap(out, metricsAcc)
+      // `++` evaluates its argument once, when `out` is drained: the
+      // partition's metric is emitted exactly once
+      out ++ {
+        metricsAcc.add(PartitionMetric(
+          runId, chunkId, org.apache.spark.TaskContext.getPartitionId(),
+          nDocs, nFailed, spansIn, spansOut,
+          graft.lm.Scorer.threadLmCallCount - lm0,
+          System.currentTimeMillis() - t0,
+          if (nFailed == 0) "done" else "done_with_failures",
+          firstError, System.currentTimeMillis()))
+        Iterator.empty
+      }
     }
     spark.createDataset(rdd)
   }
 
-  /** HTML twin of extractChunk: the web kernel over (doc_id, html) rows
-    * with the SAME per-partition lineage metrics contract (one
-    * PartitionMetric per partition; a null/failed document is a metrics
-    * row, never a task failure). `n_spans_in` is 0 by definition — the
-    * web input has no span column; `n_spans_out` counts emitted blocks.
+  /** Extract one chunk of (doc_id, spans) rows with the spans kernel:
+    * returns the output Dataset; metrics go to `metricsAcc`.
     */
-  def extractChunkHtml(
-      docs: org.apache.spark.sql.DataFrame,
+  def extractChunk(
+      docs: Dataset[DocRow],
       cfg: JobConfig,
       chunkId: Int,
       metricsAcc: CollectionAccumulator[PartitionMetric]): Dataset[ExtractedDoc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val runId = cfg.runId
-    val rdd = docs.select("doc_id", "html").as[(String, String)]
-      .queryExecution.toRdd.mapPartitions { it =>
-        val m = new PartitionInstrumentation(runId, chunkId)
-        val out = it.flatMap { row =>
-          m.nDocs += 1
-          var docId = "(null doc_id)"
-          try {
-            if (!row.isNullAt(0)) docId = row.getUTF8String(0).toString
-            require(!row.isNullAt(1), "null html")
-            val r = graft.html.HtmlExtract.extractRow(
-              docId, row.getUTF8String(1).toString)
-            m.spansOut += r.spans.length
-            Some(r)
-          } catch {
-            case scala.util.control.NonFatal(e) => m.failed(docId, e); None
-          }
-        }
-        m.wrap(out, metricsAcc)
-      }
-    spark.createDataset(rdd)
-  }
-
-  /** Crawl-native twin of extractChunkHtml: (doc_id, html_bytes,
-    * content_type) rows through the charset ladder + web kernel in ONE
-    * map pass, same metrics contract. A null content_type cell is fine
-    * (the ladder continues); null bytes are a counted metrics failure.
-    */
-  def extractChunkHtmlBytes(
-      docs: org.apache.spark.sql.DataFrame,
-      cfg: JobConfig,
-      chunkId: Int,
-      metricsAcc: CollectionAccumulator[PartitionMetric]): Dataset[ExtractedDoc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val runId = cfg.runId
-    val rdd = docs.select("doc_id", "html_bytes", "content_type")
-      .queryExecution.toRdd.mapPartitions { it =>
-        val m = new PartitionInstrumentation(runId, chunkId)
-        val out = it.flatMap { row =>
-          m.nDocs += 1
-          var docId = "(null doc_id)"
-          try {
-            if (!row.isNullAt(0)) docId = row.getUTF8String(0).toString
-            require(!row.isNullAt(1), "null html_bytes")
-            val ct = if (row.isNullAt(2)) null else row.getUTF8String(2).toString
-            val r = graft.html.HtmlExtract.extractRowBytes(
-              docId, row.getBinary(1), ct)
-            m.spansOut += r.spans.length
-            Some(r)
-          } catch {
-            case scala.util.control.NonFatal(e) => m.failed(docId, e); None
-          }
-        }
-        m.wrap(out, metricsAcc)
-      }
-    spark.createDataset(rdd)
+    val spans = kernels("spans")
+    extractRows(spans.columns(docs.toDF()), spans, cfg, chunkId, metricsAcc)
   }
 
   /** Chunk ids already recorded complete in the metrics table (resume).
@@ -329,6 +298,7 @@ object ExtractJob {
   /** Run the job end-to-end with checkpointed resume. */
   def run(spark: SparkSession, cfg: JobConfig): Unit = {
     import spark.implicits._
+    val kernel = kernels(cfg.inputKind)
     // consulted regardless of cfg.chunks: a rerun of an already-complete
     // job (chunks=1 included) must be a no-op, not a second copy
     val done = completedChunks(spark, cfg)
@@ -357,36 +327,14 @@ object ExtractJob {
 
     (0 until cfg.chunks).foreach { chunk =>
       if (!done.contains(chunk)) {
-        // the kernels share every job mechanism; only the data columns
-        // and the per-row function differ. html_bytes additionally
-        // carries content_type when the input has it (a crawl table
-        // without one still works — the charset ladder continues past
-        // the absent transport layer)
-        def inputCols(df: org.apache.spark.sql.DataFrame)
-            : org.apache.spark.sql.DataFrame = cfg.inputKind match {
-          case "html" => df.select("doc_id", "html")
-          case "html_bytes" =>
-            // a WARC landing (Warc.ingestToTable) carries 3xx redirect
-            // rows — crawl EDGES with empty bodies; only HTTP-200
-            // captures are documents (mirrors Warc.extractAll's filter)
-            val content =
-              if (df.columns.contains("http_status"))
-                df.filter(col("http_status") === 200)
-              else df
-            if (content.columns.contains("content_type"))
-              content.select("doc_id", "html_bytes", "content_type")
-            else content.select(col("doc_id"), col("html_bytes"),
-              lit(null).cast("string").as("content_type"))
-          case _ => df.select("doc_id", "spans")
-        }
         val slice =
           if (cfg.bucketedInput) {
             // partition pruning on the bucket= layout: only this chunk's
             // files are scanned (JobSpec asserts the pushed filter)
-            inputCols(spark.read.format(cfg.format).load(cfg.inputPath)
+            kernel.columns(spark.read.format(cfg.format).load(cfg.inputPath)
               .filter(col("bucket") === chunk))
           } else {
-            val docs = inputCols(spark.read.format(cfg.format).load(cfg.inputPath))
+            val docs = kernel.columns(spark.read.format(cfg.format).load(cfg.inputPath))
             if (cfg.chunks == 1) docs
             else docs.filter(pmod(xxhash64(col("doc_id")), lit(cfg.chunks)) === chunk)
           }
@@ -412,28 +360,12 @@ object ExtractJob {
           case None => slice
         }
         val part =
-          if (cfg.repartitionInput) {
-            // skew measure AND threshold are per-kind: span count vs
-            // bigDocSpanThreshold for layout docs, char length vs
-            // bigDocHtmlChars for pages (the units differ by ~an order of
-            // magnitude — see the JobConfig scaladoc)
-            val (sizeCol, threshold) = cfg.inputKind match {
-              case "html" => (length(col("html")), cfg.bigDocHtmlChars)
-              // length(binary) = octet count; bytes-per-char ~1 for the
-              // dominant encodings, so the same char threshold applies
-              case "html_bytes" => (length(col("html_bytes")), cfg.bigDocHtmlChars)
-              case _ => (size(col("spans")), cfg.bigDocSpanThreshold)
-            }
+          if (cfg.repartitionInput)
             repartitionSkewAwareDf(sliceTodo, cfg.numPartitions,
-              threshold, sizeCol)
-          } else sliceTodo // ingest-time layout already distributes: map-only
+              kernel.bigDoc(cfg), kernel.size)
+          else sliceTodo // ingest-time layout already distributes: map-only
         val acc = spark.sparkContext.collectionAccumulator[PartitionMetric](s"metrics-$chunk")
-        val out = cfg.inputKind match {
-          case "html" => extractChunkHtml(part, cfg, chunk, acc)
-          case "html_bytes" => extractChunkHtmlBytes(part, cfg, chunk, acc)
-          case _ =>
-            extractChunk(part.select("doc_id", "spans").as[DocRow], cfg, chunk, acc)
-        }
+        val out = extractRows(part, kernel, cfg, chunk, acc)
         // chunk mode: Overwrite — the chunk directory is the retry unit, so
         // a crashed-after-partial-commit attempt (committer v2, speculative
         // tasks) is simply replaced on resume — idempotent by construction.
@@ -473,25 +405,28 @@ object ExtractJob {
       .select(col("doc_id"), col("o.spans").as("actual"), col("e.spans").as("expected"))
   }
 
-  /** spark-submit entrypoint (north_rule: "run via spark-submit"):
-    *
-    *   spark-submit --class graft.job.ExtractJob <jar> \
-    *     --input <path> --output <path> --metrics <path> \
-    *     [--run-id r] [--partitions n] [--chunks k] [--format parquet] \
-    *     [--big-doc-spans n] [--big-doc-html-chars n] [--fast true|false] \
-    *     [--bucketed-input true|false] [--repartition true|false] \
-    *     [--input-kind spans|html|html_bytes]
-    *
-    * The session is taken from spark-submit's conf (master, executors,
-    * AQE, shuffle partitions come from the cluster submit, not the code).
+  /** The flags `main` documents, each taking one value. */
+  private val Flags = Set("input", "output", "metrics", "run-id", "partitions",
+    "chunks", "format", "big-doc-spans", "big-doc-html-chars", "fast",
+    "bucketed-input", "repartition", "input-kind")
+
+  /** `main`'s argv -> JobConfig. Every argument must be a `--flag value`
+    * pair with a flag from `Flags`: an unknown or repeated flag, or a flag
+    * without a value, fails instead of being dropped.
     */
-  def main(args: Array[String]): Unit = {
-    val kv = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
+  def parseArgs(args: Array[String]): JobConfig = {
+    require(args.length % 2 == 0,
+      s"expected --flag value pairs, got ${args.length} arguments: ${args.mkString(" ")}")
+    val pairs = args.grouped(2).map { case Array(k, v) =>
+      require(k.startsWith("--") && Flags(k.drop(2)),
+        s"unknown flag '$k' (known: ${Flags.toSeq.sorted.map("--" + _).mkString(" ")})")
+      k.drop(2) -> v
+    }.toSeq
+    val kv = pairs.toMap
+    require(kv.size == pairs.size, s"repeated flag in ${args.mkString(" ")}")
     def req(k: String): String =
       kv.getOrElse(k, sys.error(s"missing required --$k <value>"))
-    val cfg = JobConfig(
+    JobConfig(
       inputPath = req("input"),
       outputPath = req("output"),
       metricsPath = req("metrics"),
@@ -504,8 +439,24 @@ object ExtractJob {
       bucketedInput = kv.getOrElse("bucketed-input", "false").toBoolean,
       repartitionInput = kv.getOrElse("repartition", "true").toBoolean,
       inputKind = kv.getOrElse("input-kind", "spans"),
-      extract = graft.reflow.ExtractConfig(
-        fast = kv.getOrElse("fast", "true").toBoolean))
+      extract = ExtractConfig(fast = kv.getOrElse("fast", "true").toBoolean))
+  }
+
+  /** spark-submit entrypoint (north_rule: "run via spark-submit"):
+    *
+    *   spark-submit --class graft.job.ExtractJob <jar> \
+    *     --input <path> --output <path> --metrics <path> \
+    *     [--run-id r] [--partitions n] [--chunks k] [--format parquet] \
+    *     [--big-doc-spans n] [--big-doc-html-chars n] [--fast true|false] \
+    *     [--bucketed-input true|false] [--repartition true|false] \
+    *     [--input-kind spans|html|html_bytes]
+    *
+    * The session is taken from spark-submit's conf (master, executors,
+    * AQE, shuffle partitions come from the cluster submit, not the code);
+    * a local/dev run without one uses -Dspark.master or local[32].
+    */
+  def main(args: Array[String]): Unit = {
+    val cfg = parseArgs(args)
     val builder = SparkSession.builder()
       .appName(s"graft-extract-${cfg.runId}")
       .config("spark.sql.adaptive.enabled", "true")
@@ -513,8 +464,8 @@ object ExtractJob {
     // local/dev invocation
     val withMaster =
       if (sys.props.contains("spark.master")) builder
-      else builder.master(kv.getOrElse("master", "local[32]"))
-        .config("spark.sql.shuffle.partitions", kv.getOrElse("partitions", "32"))
+      else builder.master("local[32]")
+        .config("spark.sql.shuffle.partitions", cfg.numPartitions.toString)
     val spark = withMaster.getOrCreate()
     run(spark, cfg)
     spark.stop()

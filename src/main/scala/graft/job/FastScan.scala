@@ -1,11 +1,10 @@
 package graft.job
 
-import graft.assemble.DocumentOutput
 import graft.codec.{SpanCodec, TreeBuilder}
 import graft.extract.Extractor
 import graft.model._
 import graft.reflow.ExtractConfig
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
@@ -18,8 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * saturates around 8 threads on allocation; this path allocates only the
   * Strings the kernel actually consumes and compares span kinds against
   * cached UTF8String constants without decoding them. Measured ~2x less
-  * deser garbage; the kernel itself scales near-linearly (see
-  * `tools/BenchTool kernel`).
+  * deser garbage; the per-layer cost is in perfbench's traced
+  * `pdf_extract` run (`codec.decode_us`, `extract.kernel_us`).
   *
   * Safety: UnsafeRows from `queryExecution.toRdd` are reused by the
   * scanner — each row is fully consumed (tree built) before `next()`.
@@ -113,6 +112,15 @@ object FastScan {
     // unknown kinds ignored (forward compat)
   }
 
+  /** The spans kernel on one row: decode -> extractTree -> emitSpans.
+    * The job's chunk loop and `extract` both run it.
+    */
+  def extractRow(docId: String, spans: ArrayData, cfg: ExtractConfig,
+      ord: SpanOrdinals): ExtractedDoc = {
+    val out = Extractor.extractTree(decodeSpans(spans, cfg.fast, ord), cfg)
+    ExtractedDoc(docId, Extractor.emitSpans(out), out.text())
+  }
+
   /** Extract a (doc_id, spans) DataFrame via the Tungsten-direct path.
     * Returns the typed output Dataset (output-side encoding is cheap: a
     * handful of rendered spans per doc).
@@ -123,20 +131,10 @@ object FastScan {
     val pruned = df.select("doc_id", "spans")
     val ord = SpanOrdinals.from(pruned.schema)
     val rdd = pruned.queryExecution.toRdd.mapPartitions(_.flatMap { row =>
-      try {
-        // null doc_id/spans are malformed DOCUMENTS, not task failures —
-        // the reads live inside the try so the row-never-task contract
-        // holds for them too
-        val docId = row.getUTF8String(0).toString
-        val tree = decodeSpans(row.getArray(1), cfg.fast, ord)
-        val out: DocumentOutput = Extractor.extractTree(tree, cfg)
-        Some(ExtractedDoc(docId, Extractor.emitSpans(out), out.text()))
-      } catch {
-        // same contract as Extractor.extractRow: any malformed document
-        // fails the row, never the task
-        case _: ExtractionException => None
-        case scala.util.control.NonFatal(_) => None
-      }
+      // a malformed document (null doc_id/spans included: the reads live
+      // inside the try) fails the row, never the task
+      try Some(extractRow(row.getUTF8String(0).toString, row.getArray(1), cfg, ord))
+      catch { case scala.util.control.NonFatal(_) => None }
     })
     spark.createDataset(rdd)
   }

@@ -52,6 +52,97 @@ class JobSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** The web kernels read no span column: n_spans_in is 0 on every
+    * metrics row, and n_spans_out sums to the spans written.
+    */
+  private def assertWebLineage(metrics: org.apache.spark.sql.DataFrame,
+      out: Array[ExtractedDoc]): Unit = {
+    import org.apache.spark.sql.functions.{col, sum}
+    assert(metrics.filter(col("n_spans_in") =!= 0).count() == 0)
+    assert(metrics.agg(sum("n_spans_out")).head.getLong(0) ==
+      out.map(_.spans.length).sum.toLong)
+  }
+
+  test("lineage metrics per chunk: n_spans_in counts failing docs' spans too") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val good = corpus(24)
+    // a line box that does not parse fails the doc after its spans are read
+    def badBox(d: DocRow, id: String): DocRow = {
+      val i = d.spans.indexWhere(_.kind == "line")
+      DocRow(id, d.spans.updated(i, d.spans(i).copy(text = "box=50.0,x,500.0,12.0")))
+    }
+    val rows = good ++ Seq(badBox(good(0), "bad-box-0"), badBox(good(1), "bad-box-1"),
+      DocRow("null-spans-0", null), DocRow("null-spans-1", null))
+    spark.createDataset(rows).write.mode("overwrite").parquet(s"$dir/in-lin")
+    val cfg = JobConfig(s"$dir/in-lin", s"$dir/out-lin", s"$dir/m-lin",
+      runId = "rl", numPartitions = 2, chunks = 2)
+    ExtractJob.run(spark, cfg)
+    val planted = Set("bad-box-0", "bad-box-1", "null-spans-0", "null-spans-1")
+    val chunkOf = spark.read.parquet(cfg.inputPath)
+      .select(col("doc_id"), pmod(xxhash64(col("doc_id")), lit(2)))
+      .as[(String, Long)].collect().toMap
+    val byChunk = rows.groupBy(d => chunkOf(d.doc_id).toInt)
+    val m = spark.read.parquet(cfg.metricsPath)
+    assert(m.agg(sum("n_failed")).head.getLong(0) == 4L)
+    (0 until 2).foreach { c =>
+      val docs = byChunk.getOrElse(c, Seq.empty)
+      val got = m.filter(col("chunk_id") === c)
+        .agg(sum("n_docs"), sum("n_failed"), sum("n_spans_in"), sum("n_spans_out")).head
+      val written = spark.read.parquet(s"${cfg.outputPath}/chunk=$c").as[ExtractedDoc]
+        .collect()
+      assert(written.map(_.doc_id).toSet == docs.map(_.doc_id).toSet -- planted)
+      assert(got.getLong(0) == docs.length, s"n_docs, chunk $c")
+      assert(got.getLong(1) == docs.count(d => planted(d.doc_id)), s"n_failed, chunk $c")
+      assert(got.getLong(2) == docs.filter(_.spans != null).map(_.spans.length).sum,
+        s"n_spans_in, chunk $c")
+      assert(got.getLong(3) == written.map(_.spans.length).sum, s"n_spans_out, chunk $c")
+    }
+  }
+
+  test("unknown inputKind fails at JobConfig construction; nothing is written") {
+    import spark.implicits._
+    spark.createDataset(corpus(5)).write.mode("overwrite").parquet(s"$dir/in-kind")
+    val e = intercept[IllegalArgumentException](ExtractJob.run(spark,
+      JobConfig(s"$dir/in-kind", s"$dir/out-kind", s"$dir/m-kind", inputKind = "pdf")))
+    assert(e.getMessage.contains("inputKind"), e.getMessage)
+    assert(!new java.io.File(s"$dir/out-kind").exists)
+    assert(!new java.io.File(s"$dir/m-kind").exists)
+  }
+
+  test("unknown resumeGranularity fails at JobConfig construction; nothing is written") {
+    import spark.implicits._
+    spark.createDataset(corpus(5)).write.mode("overwrite").parquet(s"$dir/in-gran")
+    val e = intercept[IllegalArgumentException](ExtractJob.run(spark,
+      JobConfig(s"$dir/in-gran", s"$dir/out-gran", s"$dir/m-gran",
+        resumeGranularity = "docs")))
+    assert(e.getMessage.contains("resumeGranularity"), e.getMessage)
+    assert(!new java.io.File(s"$dir/out-gran").exists)
+    assert(!new java.io.File(s"$dir/m-gran").exists)
+  }
+
+  test("main's argv: every documented flag lands in its field; unknown or valueless flags fail") {
+    val required = Array("--input", "i", "--output", "o", "--metrics", "m")
+    assert(ExtractJob.parseArgs(required) == JobConfig("i", "o", "m"))
+    assert(ExtractJob.parseArgs(required ++ Array(
+      "--run-id", "r7", "--partitions", "5", "--chunks", "3", "--format", "orc",
+      "--big-doc-spans", "11", "--big-doc-html-chars", "12", "--fast", "false",
+      "--bucketed-input", "true", "--repartition", "false", "--input-kind", "html")) ==
+      JobConfig("i", "o", "m", runId = "r7", numPartitions = 5, chunks = 3,
+        bigDocSpanThreshold = 11, bigDocHtmlChars = 12, format = "orc",
+        bucketedInput = true, repartitionInput = false, inputKind = "html",
+        extract = graft.reflow.ExtractConfig(fast = false)))
+    def rejected(args: String*): Unit =
+      intercept[IllegalArgumentException](ExtractJob.parseArgs(required ++ args))
+    rejected("--chunk", "4") // typo of --chunks
+    rejected("--bucketed-input") // no value
+    rejected("chunks", "4") // no dashes
+    rejected("--chunks", "4", "--chunks", "2")
+    rejected("--input-kind", "pdf")
+    rejected("--master", "local[2]") // -Dspark.master sets a local master
+    intercept[RuntimeException](ExtractJob.parseArgs(Array("--input", "i")))
+  }
+
   test("html job: web kernel through the chunked/resumable machinery") {
     import spark.implicits._
     val pages = graft.fixtures.HtmlFixtures.corpus(30) :+ ("web-broken", null)
@@ -69,6 +160,7 @@ class JobSpec extends AnyFunSuite with BeforeAndAfterAll {
       org.apache.spark.sql.functions.col("status") === "done_with_failures" &&
         org.apache.spark.sql.functions.col("error").contains("web-broken"))
       .count() >= 1)
+    assertWebLineage(metrics, out)
     // rerun of the completed job is a no-op
     ExtractJob.run(spark, cfg)
     assert(ExtractJob.readOutput(spark, cfg).count() == 30)
@@ -102,6 +194,7 @@ class JobSpec extends AnyFunSuite with BeforeAndAfterAll {
       org.apache.spark.sql.functions.col("status") === "done_with_failures" &&
         org.apache.spark.sql.functions.col("error").contains("bytes-broken"))
       .count() >= 1)
+    assertWebLineage(metrics, out)
     // a content_type-less input table still runs (ladder continues)
     pages.toDF("doc_id", "html_bytes", "content_type").drop("content_type")
       .write.mode("overwrite").parquet(s"$dir/bin2")
